@@ -1395,8 +1395,9 @@ def cmd_extract_markup(args):
     into the KG): a parquet page table (url, html) → flattened
     JSON-LD rows (url, block, node, subj, pred, obj, kind) as
     parquet; --meta-out additionally writes the OpenGraph/<meta>
-    key/content table; --triples-out writes the (subj, pred, obj)
-    projection ready for merge-kg/fuse-facts.  Prints a JSON
+    key/content table; --triples-out writes the distinct
+    (subj, pred, obj, url) triple rows (markup_as_triples, the same
+    projection run-pipeline --markup sinks).  Prints a JSON
     summary including the surfaced malformed-node count."""
     from pyspark.sql import functions as F
 
@@ -2011,8 +2012,8 @@ def main(argv=None):
                         help="also write the <meta> key/content "
                              "table here"),
         sp.add_argument("--triples-out", dest="triples_out",
-                        help="also write the (subj, pred, obj) "
-                             "projection here"),
+                        help="also write the distinct (subj, pred, "
+                             "obj, url) triple rows here"),
         sp.add_argument("--tables-out", dest="tables_out",
                         help="also write the WebTables-style "
                              "(table, row, col, header, value) "

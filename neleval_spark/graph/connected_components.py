@@ -137,13 +137,16 @@ def connected_components(
             return edges.sparkSession.createDataFrame(
                 rows, "vertex string, component string")
     # distributed path: LAZY checkpoints throughout (the r6
-    # one-job-per-round discipline, see pagerank.py) — the first
-    # round's signature collect materializes the deduped edge list,
-    # each later round's signature materializes that round's edges,
-    # and the vertex table is computed from the e0 checkpoint blocks
-    # by the caller's final action.  Halves the job count per round;
-    # blocks, lineage truncation and the convergence contract are
-    # identical.
+    # one-job-per-round discipline, see pagerank.py) — each round's
+    # signature collect computes and checkpoints that round's edges.
+    # e0 and vertices are marked but never checkpointed by an action
+    # of their own (doCheckpoint only reaches the topmost marked RDD),
+    # so their lineage is not truncated; reuse of e0 comes from
+    # localCheckpoint's implicit MEMORY_AND_DISK persist on first
+    # compute (the first round's collect), and the vertex table is
+    # computed from those persisted blocks by the caller's final
+    # action.  Halves the job count per round; the convergence
+    # contract is identical.
     e0 = e0.localCheckpoint(eager=False)
     vertices = (
         e0.select(F.col("a").alias("vertex"))

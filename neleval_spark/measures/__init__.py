@@ -5,4 +5,4 @@ from .catalog import (  # noqa: F401
     get_measure,
     parse_measures,
 )
-from .contingency import Matrix, prf, evaluate  # noqa: F401
+from .contingency import Matrix, evaluate  # noqa: F401

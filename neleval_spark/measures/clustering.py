@@ -53,46 +53,9 @@ def _grouped(df: DataFrame, gcols: list[str], exprs: list) -> DataFrame:
     return df.agg(*exprs)
 
 
-def _outer_zip(p_side: DataFrame, r_side: DataFrame,
-               gcols: list[str]) -> DataFrame:
-    """Combine per-group precision and recall halves, zero-filling."""
-    if not gcols:
-        return p_side.crossJoin(r_side)
-    return (
-        p_side.join(r_side, gcols, "full_outer")
-        .select(
-            *gcols,
-            *[
-                F.coalesce(F.col(c), F.lit(0.0)).alias(c)
-                for c in ("p_num", "p_den", "r_num", "r_den")
-            ],
-        )
-    )
-
-
 def _fill_zero(df: DataFrame) -> DataFrame:
     return df.na.fill(
         {c: 0.0 for c in ("p_num", "p_den", "r_num", "r_den")})
-
-
-def intersections(gold: DataFrame, pred: DataFrame, key: list[str],
-                  gcols: list[str]) -> DataFrame:
-    """I(gcols, eid_g, eid_s) = intersection sizes of cluster pairs
-    (standalone helper over pre-deduped membership frames; the
-    clustering fns below use the shared ``_dedup_pairs`` frames
-    instead)."""
-    g = gold.withColumnRenamed("eid", "eid_g")
-    s = pred.withColumnRenamed("eid", "eid_s")
-    return (
-        ns_join(g, s, gcols + key, "inner")
-        .groupBy(*(gcols + ["eid_g", "eid_s"]))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-
-
-def cluster_sizes(side: DataFrame, gcols: list[str]) -> DataFrame:
-    return side.groupBy(*(gcols + ["eid"])).agg(
-        F.count(F.lit(1)).alias("n"))
 
 
 def _dedup_pairs(side: DataFrame, key: list[str],
@@ -139,7 +102,7 @@ def _intersections_dp(gdp: DataFrame, sdp: DataFrame,
 
 
 def _sizes_dp(dp: DataFrame, gcols: list[str]) -> DataFrame:
-    """cluster_sizes over a ``_dedup_pairs`` frame."""
+    """Cluster sizes over a ``_dedup_pairs`` frame."""
     return dp.groupBy(*(gcols + ["eid"])).agg(
         F.count(F.lit(1)).alias("n"))
 

@@ -91,14 +91,6 @@ class Matrix:
         }
 
 
-def prf(p_num, p_den, r_num, r_den):
-    """(neleval/coref_metrics.py:253-262)"""
-    p = p_num / p_den if p_den > 0 else 0.0
-    r = r_num / r_den if r_den > 0 else 0.0
-    f = 2 * p * r / (p + r) if p + r else 0.0
-    return p, r, f
-
-
 def contingency_df(
     sys_df: DataFrame,
     gold_df: DataFrame,

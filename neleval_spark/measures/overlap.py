@@ -31,8 +31,13 @@ from .catalog import MeasureSpec
 from .sets import project_measure, expand_key
 
 
+# offset band width of the banded overlap join (see _pair_overlaps)
+BAND_WIDTH = 64
+
+
 def _pair_overlaps(sys_df: DataFrame, gold_df: DataFrame,
-                   spec: MeasureSpec, gcols: list[str]) -> DataFrame:
+                   spec: MeasureSpec, gcols: list[str],
+                   width: int = BAND_WIDTH) -> DataFrame:
     """All overlapping same-key (sys, gold) span pairs.
 
     Banded interval join (r6): joining on the document key alone
@@ -46,10 +51,9 @@ def _pair_overlaps(sys_df: DataFrame, gold_df: DataFrame,
     spans, so both sides carry that band).  Exact — no overlapping
     pair can be missed and none duplicates — and worst-case work per
     (doc, band) is the local span density, not the document total.
-    Band width via ``spark.neleval.overlap.bandWidth`` (default 64
-    offsets): smaller bands = fewer candidate pairs, but a span costs
-    length/width + 1 explode rows, so very long spans favor wider
-    bands."""
+    Band ``width`` (``BAND_WIDTH`` offsets): smaller bands = fewer
+    candidate pairs, but a span costs length/width + 1 explode rows,
+    so very long spans favor wider bands."""
     key = [f for f in spec.key if f != "span"]
     keycols = expand_key(tuple(key))
     join_key = list(dict.fromkeys(gcols + keycols + ["docid"]))
@@ -62,13 +66,14 @@ def _pair_overlaps(sys_df: DataFrame, gold_df: DataFrame,
                         extra=["docid", "start", "end"]) \
         .select(*join_key,
                 F.col("start").alias("g_start"), F.col("end").alias("g_end"))
-    w = int(sys_df.sparkSession.conf.get(
-        "spark.neleval.overlap.bandWidth", "64"))
+    def band(c):
+        return F.floor(F.col(c) / width)
+
     sb = s.withColumn("_band", F.explode(F.sequence(
-        F.floor(F.col("s_start") / w), F.floor(F.col("s_end") / w))))
+        band("s_start"), band("s_end"))))
     gb = g.withColumn("_band", F.explode(F.sequence(
-        F.floor(F.col("g_start") / w), F.floor(F.col("g_end") / w))))
-    first_band = F.floor(F.greatest("s_start", "g_start") / w)
+        band("g_start"), band("g_end"))))
+    first_band = F.floor(F.greatest("s_start", "g_start") / width)
     return ns_join(sb, gb, join_key + ["_band"], "inner").where(
         (F.col("s_start") <= F.col("g_end"))
         & (F.col("g_start") <= F.col("s_end"))

@@ -54,9 +54,8 @@ def with_context_features(cands: DataFrame) -> DataFrame:
 
 def score_and_select(cands: DataFrame) -> DataFrame:
     """Score candidates, keep the argmax per mention, carry the full
-    sorted candidate list for the mentions table."""
-    if "kw_hit" not in cands.columns:
-        cands = with_context_features(cands)
+    sorted candidate list for the mentions table.  ``cands`` must
+    already carry the ``kw_hit`` feature (:func:`with_context_features`)."""
     scored = cands.withColumn(
         "score", link_score_udf(F.col("prior"), F.col("kw_hit")))
 

@@ -54,10 +54,10 @@ def canonicalize_nils(
     replaced by the cluster label and type/score defaulted.
     """
     # The input fans out (nil branch, linked branch, key graph);
-    # callers must pass a MATERIALIZED table (build_mentions
-    # localCheckpoints the scored mentions) — re-caching here through
-    # the columnar InMemoryRelation is prohibitively expensive for
-    # rows with nested candidate arrays.
+    # callers must pass a MATERIALIZED table (build_mentions writes
+    # the scored mentions to a scratch parquet snapshot) — re-caching
+    # here through the columnar InMemoryRelation is prohibitively
+    # expensive for rows with nested candidate arrays.
     nils = mentions.where(F.col("eid").isNull())
     linked = mentions.where(F.col("eid").isNotNull())
 

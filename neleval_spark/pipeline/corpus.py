@@ -77,11 +77,6 @@ TEMPLATES_D = [
 ]
 
 
-def _entity_index():
-    by_eid = {e[0]: e for e in KB}
-    return by_eid
-
-
 def gen_doc(doc_id: int, seed: int = SEED, min_sents: int = 2,
             max_sents: int = 4) -> dict:
     """Generate one document (pure, deterministic).

@@ -365,8 +365,10 @@ def microdata_triples(pages: DataFrame, url_col: str = "url",
 
 
 def markup_as_triples(flat: DataFrame) -> DataFrame:
-    """Project `jsonld_triples` output onto the pipeline's triple
-    shape (subj, pred, obj) so it can feed ``write_triples`` /
-    ``merge_kg`` directly; object/array payloads stay as JSON text."""
+    """Project `jsonld_triples` output onto the pipeline's distinct
+    triple rows (subj, pred, obj, url) so it can feed
+    ``triples.with_part_id`` → ``write_triples`` or ``merge_kg``
+    directly; the witness url is kept for the sink's url-hashed
+    bucketing.  Object/array payloads stay as JSON text."""
     return flat.where(F.col("kind") != "null") \
-        .select("subj", "pred", "obj")
+        .select("subj", "pred", "obj", "url").distinct()

@@ -39,6 +39,8 @@ from typing import Iterator, Mapping, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .extract import extract_text
+
 # maximal single-space-separated runs of capitalized tokens — the C-
 # speed scan that skips all-lowercase text.  Both detection passes are
 # anchored on these runs: dictionary entries are titlecase named
@@ -155,19 +157,7 @@ def detect_mentions_text(text: str, gazetteer: Gazetteer | None = None):
 def detect_mentions(pages: DataFrame,
                     gazetteer: Gazetteer | None = None) -> DataFrame:
     """url+text → mention rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                for s, e, surf, li, line in detect_mentions_text(
-                        text, gazetteer):
-                    out.append((url, s, e, surf, li, line))
-            yield pd.DataFrame(
-                out, columns=["url", "start", "end", "surface",
-                              "sent_uid", "context"])
-
-    return pages.select("url", "text").mapInPandas(gen, schema=NER_SCHEMA)
+    return _tag(pages, gazetteer, extract=False)
 
 
 def extract_and_detect(pages: DataFrame,
@@ -180,13 +170,21 @@ def extract_and_detect(pages: DataFrame,
     fusing them keeps a single Arrow boundary and no extra shuffle —
     the per-document text never crosses back into the JVM.
     """
-    from .extract import extract_text
+    return _tag(pages, gazetteer, extract=True)
+
+
+def _tag(pages: DataFrame, gazetteer: Gazetteer | None,
+         extract: bool) -> DataFrame:
+    """The one NER batch loop: url + text → mention rows, or, with
+    ``extract``, url + html → mention rows with each document's text
+    extracted inside the same loop."""
+    col = "html" if extract else "text"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
+            for url, doc in zip(pdf["url"], pdf[col]):
+                text = extract_text(doc) if extract else doc
                 for s, e, surf, li, line in detect_mentions_text(
                         text, gazetteer):
                     out.append((url, s, e, surf, li, line))
@@ -194,7 +192,7 @@ def extract_and_detect(pages: DataFrame,
                 out, columns=["url", "start", "end", "surface",
                               "sent_uid", "context"])
 
-    return pages.select("url", "html").mapInPandas(gen, schema=NER_SCHEMA)
+    return pages.select("url", col).mapInPandas(gen, schema=NER_SCHEMA)
 
 
 MAX_GAZETTEER_ALIASES = 10_000_000
@@ -221,11 +219,10 @@ def gazetteer_from_kb(kb: DataFrame) -> Gazetteer:
     # collecting more than the cap.
     rows = aliases.limit(MAX_GAZETTEER_ALIASES + 1).collect()
     if len(rows) > MAX_GAZETTEER_ALIASES:
-        n = aliases.count()
         raise ValueError(
-            f"KB has {n:,} distinct aliases > MAX_GAZETTEER_ALIASES="
-            f"{MAX_GAZETTEER_ALIASES:,}; a driver-side gazetteer this "
-            "large would exhaust driver memory. Run the tagger with a "
+            f"KB has more than {MAX_GAZETTEER_ALIASES:,} distinct "
+            "aliases (MAX_GAZETTEER_ALIASES); a driver-side gazetteer "
+            "this large would exhaust driver memory. Run the tagger with a "
             "truncated/curated alias list, or with an empty gazetteer "
             "(casing evidence only) and let the candidate-generation "
             "join handle alias matching distributedly.")

@@ -18,15 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .candidates import generate_candidates, score_and_select
+from .candidates import (
+    generate_candidates, score_and_select, with_context_features)
 from .canonicalize import canonicalize_nils
-from .extract import with_extracted_text
-from .ner import detect_mentions
-from .triples import emit_triples
+from .ner import extract_and_detect, gazetteer_from_kb
+from .triples import emit_triples, with_part_id
 
 
 def build_mentions(pages: DataFrame, kb: DataFrame,
-                   use_stored_text: bool = False,
                    dedupe_snapshots: bool = False,
                    canonicalize: bool = True) -> DataFrame:
     """web_pages + alias dict → linked, canonicalized mentions.
@@ -38,10 +37,6 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     map-side-combined max_by, ≤1 row per url per partition shuffled).
     Off by default: the synthetic corpus is already one-row-per-url,
     and the extra exchange isn't free."""
-    from .ner import extract_and_detect, gazetteer_from_kb
-
-    from .candidates import with_context_features
-
     if dedupe_snapshots:
         from ..functions.corpusops import latest_snapshot
 
@@ -55,13 +50,9 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     pages = pages.where(F.col("lang") == "en")
     # the alias dim doubles as the tagger's dictionary (ner.py):
     # known names are found by longest-match even where the casing
-    # heuristics alone would hesitate
-    gaz = gazetteer_from_kb(kb)
-    if use_stored_text:
-        mentions = detect_mentions(pages, gazetteer=gaz)
-    else:
-        # extraction + NER fused into one Python hop (see ner.py)
-        mentions = extract_and_detect(pages, gazetteer=gaz)
+    # heuristics alone would hesitate; extraction + NER are fused into
+    # one Python hop (see ner.py)
+    mentions = extract_and_detect(pages, gazetteer=gazetteer_from_kb(kb))
     # candidate gen (broadcast join — no shuffle) and the
     # context-feature projection run in the SAME stage as NER, so the
     # wide context strings are dropped BEFORE the exchange; the
@@ -74,8 +65,7 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     cands = cands.repartition(F.col("url"))
     # materialize the scored mention table once (canonicalization fans
     # out into ≥3 consumers — nil branch, linked branch, key graph —
-    # and a live plan with Python stages would re-run per consumer);
-    # see _materialize for the scratch-parquet-vs-persist strategies
+    # and a live plan with Python stages would re-run per consumer)
     linked = _materialize(score_and_select(cands))
     if not canonicalize:
         # pre-canonicalization linked mentions: the PER-PAGE-pure
@@ -95,36 +85,22 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
 
 
 def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a multi-consumer frame once.
+    """Materialize a multi-consumer frame once: write it to a scratch
+    parquet table and re-read it.
 
-    Two strategies (``spark.neleval.materialize`` conf):
-
-    * ``parquet`` (default): write to a scratch parquet table and
-      re-read.  Each downstream consumer then scans a COLUMNAR,
-      column-pruned snapshot — the triple sink reads 3 narrow columns
-      instead of deserializing whole nested-candidate rows, and the
-      nested ``candidates`` array is only decoded by the consumer
-      that actually outputs it.  On a cluster this is a staging table
-      (point ``spark.neleval.scratchDir`` at shared storage); the
-      returned frame carries ``_scratch_dir`` so lifetime managers
-      (streaming ingest) can delete it per batch.
-    * ``persist``: DISK_ONLY serialized cache (the pre-round-3
-      behavior) — kept for comparison; every consumer pays full-row
-      Java deserialization.
+    Each downstream consumer then scans a COLUMNAR, column-pruned
+    snapshot — the triple sink reads 3 narrow columns instead of
+    deserializing whole nested-candidate rows, and the nested
+    ``candidates`` array is only decoded by the consumer that actually
+    outputs it.  On a cluster this is a staging table (point
+    ``spark.neleval.scratchDir`` at shared storage); the returned
+    frame carries ``_scratch_dir`` so lifetime managers (streaming
+    ingest, :func:`release_materialized`) can delete it.
     """
     import os
     import uuid
 
     spark = df.sparkSession
-    mode = spark.conf.get(
-        "spark.neleval.materialize",
-        os.environ.get("SPARK_NELEVAL_MATERIALIZE", "parquet"))
-    if mode == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        df = df.persist(StorageLevel.DISK_ONLY)
-        df.count()
-        return df
     base = spark.conf.get("spark.neleval.scratchDir", None) \
         or _process_scratch_root()
     path = os.path.join(base, f"neleval_mat_{uuid.uuid4().hex}")
@@ -156,7 +132,9 @@ def _process_scratch_root() -> str:
 
 
 def release_materialized(df: DataFrame) -> None:
-    """Free one _materialize result: unpersist or delete scratch."""
+    """Free one ``_materialized_deps`` handle: delete a
+    ``_materialize`` scratch snapshot, or unpersist a persisted frame
+    (``kb.build_kb_profiles`` hands those back)."""
     scratch = getattr(df, "_scratch_dir", None)
     if scratch is not None:
         import shutil
@@ -219,18 +197,10 @@ def run_pipeline(
         release_materialized(h)
     triples = emit_triples(mentions, n_buckets=n_buckets)
     if markup:
-        from .markup import jsonld_triples
+        from .markup import jsonld_triples, markup_as_triples
 
-        # markup_as_triples' projection with the url kept for the
-        # shared part_id scheme
-        mk = (jsonld_triples(pages)
-              .where(F.col("kind") != "null")
-              .select("subj", "pred", "obj", "url")
-              .distinct()
-              .withColumn("part_id",
-                          F.pmod(F.xxhash64("url"),
-                                 F.lit(n_buckets))))
-        triples = triples.unionByName(mk)
+        triples = triples.unionByName(with_part_id(
+            markup_as_triples(jsonld_triples(pages)), n_buckets))
     manifest = None
     if out_dir is not None:
         from .triples import read_triples, write_triples

@@ -107,7 +107,17 @@ def emit_triples(mentions: DataFrame, n_buckets: int = 64) -> DataFrame:
                    F.col("url")).alias("obj"),
         F.col("url"),
     )
-    return out.withColumn(
+    return with_part_id(out, n_buckets)
+
+
+def with_part_id(triples: DataFrame, n_buckets: int = 64) -> DataFrame:
+    """Attach the sink's bucket, ``part_id = pmod(xxhash64(url),
+    n_buckets)`` — the one bucketing rule shared by every writer into
+    a sink (NER triples, markup triples, compaction), so rows of the
+    same url land in the same partition whichever stream produced
+    them.  A pure row function: resume and re-bucketing re-derive it
+    exactly."""
+    return triples.withColumn(
         "part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
 
 
@@ -294,10 +304,8 @@ def compact_triples(spark: SparkSession, out_dir: str,
     triples = spark.read.parquet(data_dir)
     if "run_id" in triples.columns:
         triples = triples.drop("run_id")
-    # re-derive part_id (a pure row function) so a changed bucket
-    # count re-buckets correctly
-    triples = triples.drop("part_id").withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
+    # re-derive part_id so a changed bucket count re-buckets correctly
+    triples = with_part_id(triples.drop("part_id"), n_buckets)
 
     # the whole point of compaction is FEWER files: cluster each
     # bucket into one writer task (see write_triples)

@@ -103,11 +103,7 @@ def _warm_session(spark: SparkSession) -> None:
     (measured ~1.5-2 s shaved off the first real query on this box,
     r6 OPTIMIZATION notes).  Touches no input data, caches nothing,
     and is bounded (~100k synthetic longs); runs once per session —
-    latency-sensitive services warm Spark the same way.  Opt out with
-    SPARK_GRAFT_NO_WARMUP=1 (e.g. one-shot CLI calls on tiny data
-    where the warm-up would dominate)."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
-        return
+    latency-sensitive services warm Spark the same way."""
     if spark.conf.get("spark.neleval.warmed", "0") == "1":
         return
     from pyspark.sql import Window

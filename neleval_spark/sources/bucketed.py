@@ -17,7 +17,7 @@ co-location.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_mentions_bucketed(df: DataFrame, table: str,
@@ -55,7 +55,3 @@ def write_mentions_bucketed(df: DataFrame, table: str,
     (df.repartition(n_buckets, "docid")
      .write.bucketBy(n_buckets, "docid").sortBy("docid")
      .format("parquet").mode("overwrite").saveAsTable(table))
-
-
-def read_mentions_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

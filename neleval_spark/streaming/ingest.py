@@ -12,8 +12,8 @@ Design:
   schema; ``maxFilesPerTrigger`` bounds micro-batch size so executor
   memory is sized to the batch, not the backlog.
 * ``stream_construct`` — ``foreachBatch`` around the batch pipeline.
-  The pipeline needs its own persist + multiple actions per batch
-  (scored-mention materialization feeds the NIL branch, the linked
+  The pipeline needs a scratch snapshot + multiple actions per batch
+  (the scored-mention snapshot feeds the NIL branch, the linked
   branch and the key graph), which a single streaming plan cannot
   express — ``foreachBatch`` is the idiomatic escape hatch.
   Exactly-once: each micro-batch writes under run_id = f(batch_id)
@@ -72,7 +72,7 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
     as the batch's NER triples, so replay idempotence covers both
     streams at once."""
     from ..pipeline.run import build_mentions
-    from ..pipeline.triples import emit_triples, write_triples
+    from ..pipeline.triples import emit_triples, with_part_id, write_triples
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os
@@ -104,16 +104,11 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
         try:
             triples = emit_triples(mentions)
             if markup:
-                from ..pipeline.markup import jsonld_triples
+                from ..pipeline.markup import (
+                    jsonld_triples, markup_as_triples)
 
-                mk = (jsonld_triples(batch_df)
-                      .where(F.col("kind") != "null")
-                      .select("subj", "pred", "obj", "url")
-                      .distinct()
-                      .withColumn("part_id",
-                                  F.pmod(F.xxhash64("url"),
-                                         F.lit(64))))
-                triples = triples.unionByName(mk)
+                triples = triples.unionByName(with_part_id(
+                    markup_as_triples(jsonld_triples(batch_df))))
             # overwrite_run: a replayed batch REPLACES its own run_id
             # partitions (data + manifest) — idempotent without reading
             # the sink, correct even if the previous attempt died
@@ -122,7 +117,7 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
                           overwrite_run=True)
         finally:
             # release exactly the frames build_mentions materialized
-            # for this batch (scratch parquet or persist) — NOT
+            # for this batch (scratch parquet) — NOT
             # catalog.clearCache(), which would also evict frames the
             # caller cached (e.g. a persisted kb dim)
             from ..pipeline.run import release_materialized

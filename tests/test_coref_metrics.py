@@ -6,7 +6,14 @@ reference-coreference-scorers TC-A / TC-M cases."""
 import pytest
 
 from neleval_spark.measures.clustering import CLUSTERING_FNS
-from neleval_spark.measures.contingency import prf
+from neleval_spark.measures.contingency import Matrix
+
+
+def prf(p_num, p_den, r_num, r_den):
+    """P/R/F of a clustering measure's (p_num, p_den, r_num, r_den),
+    through the same Matrix mapping ``evaluate`` reports."""
+    m = Matrix(p_num, p_den - p_num, r_num, r_den - r_num)
+    return m.precision, m.recall, m.fscore
 
 
 def _sets_to_df(spark, clusters):

@@ -102,3 +102,25 @@ def test_incremental_only_recomputes_churn(spark, gen1, gen2, kb):
     gen2_urls = {r["url"] for r in
                  gen2.select("url").distinct().collect()}
     assert kept_urls <= gen2_urls
+
+
+def test_materialized_deps_are_released_scratch_dirs(spark, gen1, gen2,
+                                                     kb):
+    """Every handle build_mentions(canonicalize=False) and
+    incremental_linked expose is a scratch parquet dir, and
+    release_materialized deletes it."""
+    import os
+
+    from neleval_spark.pipeline.incremental import incremental_linked
+    from neleval_spark.pipeline.run import (
+        build_mentions, release_materialized)
+
+    prev = build_mentions(gen1, kb, canonicalize=False)
+    inc = incremental_linked(gen1, gen2, prev, kb)
+    deps = prev._materialized_deps + inc._materialized_deps
+    assert len(deps) == 2
+    for h in deps:
+        assert os.path.isdir(h._scratch_dir)
+    for h in deps:
+        release_materialized(h)
+        assert not os.path.exists(h._scratch_dir)

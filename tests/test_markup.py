@@ -198,7 +198,8 @@ def test_html_tables_unclosed_row_dropped(spark):
 
 def test_run_pipeline_markup_second_entrance(spark, tmp_path):
     """markup=True unions publisher JSON-LD triples into the same
-    sink/partition scheme as the NER stream."""
+    sink/partition scheme as the NER stream — at a non-default bucket
+    count, a url's markup rows share its NER rows' part_id."""
     from pyspark.sql import functions as F
 
     from neleval_spark.pipeline import kb_table, synth_corpus
@@ -213,7 +214,7 @@ def test_run_pipeline_markup_second_entrance(spark, tmp_path):
                F.concat(F.col("html").cast("string"), F.lit(block))
                .cast("binary"))
         .otherwise(F.col("html")))
-    out = run_pipeline(pages, kb_table(spark), markup=True)
+    out = run_pipeline(pages, kb_table(spark), n_buckets=8, markup=True)
     trips = out["triples"]
     mk = trips.where(F.col("subj") == "m1").collect()
     n_marked = pages.where(F.col("url").endswith("0")).count()
@@ -222,10 +223,15 @@ def test_run_pipeline_markup_second_entrance(spark, tmp_path):
     # one row per (url, triple): distinct within the markup slice
     assert len(mk) == 2 * n_marked
     # part_id follows the shared url-hash scheme
+    ner = {(r["url"], r["part_id"]) for r in
+           trips.where(F.col("pred") == "mentioned_in")
+           .select("url", "part_id").distinct().collect()}
+    assert ner  # NER stream still present
+    ner_part = dict(ner)
+    assert len(ner_part) == len(ner)
     for r in mk:
-        assert r["part_id"] is not None and 0 <= r["part_id"] < 64
-    # NER stream still present
-    assert trips.where(F.col("pred") == "mentioned_in").count() > 0
+        assert 0 <= r["part_id"] < 8
+        assert r["part_id"] == ner_part[r["url"]]
 
 
 def test_image_captions_pairs_resolution_and_filter(spark):

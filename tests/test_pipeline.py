@@ -68,6 +68,23 @@ def test_ner_finds_exactly_gold_spans(spark, corpus, gold):
     assert exp.exceptAll(found).count() == 0
 
 
+def test_fused_extract_and_detect_equals_two_step(spark, corpus):
+    """The fused html → mentions hop tags exactly what extracting the
+    text first and tagging it separately does, row for row."""
+    from neleval_spark.pipeline import kb_table
+    from neleval_spark.pipeline.extract import with_extracted_text
+    from neleval_spark.pipeline.ner import (
+        detect_mentions, extract_and_detect, gazetteer_from_kb)
+
+    pages = corpus.select("url", "html")
+    gaz = gazetteer_from_kb(kb_table(spark))
+    fused = extract_and_detect(pages, gazetteer=gaz).collect()
+    two_step = detect_mentions(with_extracted_text(pages),
+                               gazetteer=gaz).collect()
+    assert fused
+    assert sorted(map(tuple, fused)) == sorted(map(tuple, two_step))
+
+
 def test_triple_prf_gate(spark, built, gold):
     """North-rule gate: P/R ≥ 0.95 vs the reference triple set."""
     from neleval_spark.pipeline.run import (

@@ -110,16 +110,12 @@ def test_banded_overlap_pairs_exact(spark, width):
     gold_df = spark.createDataFrame(gold_rows, cols)
     spec = MeasureSpec(("span",), None, "overlap-maxmax")
 
-    spark.conf.set("spark.neleval.overlap.bandWidth", str(width))
-    try:
-        got = sorted(
-            (r["docid"], r["s_start"], r["s_end"], r["g_start"],
-             r["g_end"])
-            for r in _pair_overlaps(sys_df, gold_df, spec, [])
-            .select("docid", "s_start", "s_end", "g_start", "g_end")
-            .collect())
-    finally:
-        spark.conf.unset("spark.neleval.overlap.bandWidth")
+    got = sorted(
+        (r["docid"], r["s_start"], r["s_end"], r["g_start"],
+         r["g_end"])
+        for r in _pair_overlaps(sys_df, gold_df, spec, [], width=width)
+        .select("docid", "s_start", "s_end", "g_start", "g_end")
+        .collect())
 
     naive = sorted(
         (sd, ss, se, gs, ge)
